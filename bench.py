@@ -181,6 +181,17 @@ _STDOUT_KEEP = frozenset([
 ])
 
 
+def _fit_verdict(regressed: list[str]) -> str:
+    """The fit-tier verdict vs the settled baseline: the shortest
+    self-interpretation that still names the leaders — 'ok', or the
+    regressed count with the first two (sorted) names. The full ratio
+    map is BENCH_NORM.json."""
+    if not regressed:
+        return 'ok'
+    return (f'REGRESSED({len(regressed)}): ' + ', '.join(regressed[:2])
+            + (',..' if len(regressed) > 2 else ''))
+
+
 def _sentinel_cpu():
     """Pure-CPU calibration sentinel, independent of every code path in
     this repo: a fixed md5 churn whose wall-time tracks the HOST's
@@ -498,16 +509,7 @@ def main():
     def _compact(dp, slim=False, fit=False):
         vs = vs_verdict
         if fit and vs is not None:
-            # fit tier: the shortest self-interpretation that still
-            # names the leaders; the full ratio map is BENCH_NORM.json
-            if vs == 'all within noise':
-                vs = 'ok'
-            else:
-                names = vs.split(': ', 1)[1].split(', ')
-                names = [n for n in names if n != '...']
-                vs = (f'REGRESSED({len(regressed)}): '
-                      + ', '.join(names[:2])
-                      + (',..' if len(regressed) > 2 else ''))
+            vs = _fit_verdict(regressed)
         d = _base_dict(dp, slim, vs)
         if not fit:
             d['queries'] = {k: _q(v, dp) for k, v in timings.items()}

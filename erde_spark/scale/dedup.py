@@ -22,12 +22,13 @@ All id pairs are emitted once with ``id_a < id_b``.
 
 from __future__ import annotations
 
-
+import itertools
 import math
+from collections import Counter
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -179,7 +180,13 @@ def _sig_from_hashes(tok: DataFrame, num_perm: int = 64,
     and the Arrow crossing carries int64 lists, not token strings.
     ``keep_toks=True`` carries the token column through so callers can
     materialize (id, toks, sig) in ONE checkpoint job instead of two —
-    per-job overhead dominates small micro-batches."""
+    per-job overhead dominates small micro-batches.
+
+    Permutation i maps a token hash h (the xxhash64 value read as
+    unsigned) to ((a_i·h + b_i) mod 2^64) mod (2^61−1): ``np.outer`` and
+    the ``+`` run in uint64 and wrap modulo 2^64 BEFORE the Mersenne
+    ``%``, so this is not the textbook (a·h + b) mod (2^61−1) family.
+    The signature is the per-permutation minimum over the token set."""
     av, bv = _perm_params(num_perm, seed)
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
@@ -207,9 +214,11 @@ def minhash_signatures(df: DataFrame, id_col: str = 'doc_id', text_col: str = 't
     """(id, sig: array<long>) MinHash signatures.
 
     Token base hash = JVM ``xxhash64`` (deterministic across runs and
-    partitionings; never leaves the JVM as a string); permutations are
-    universal hashes (a*h + b) mod 2^61-1 with seeded coefficients,
-    vectorized per Arrow batch as a tokens x perms matrix min in numpy.
+    partitionings; never leaves the JVM as a string); permutation i is
+    ((a_i·h + b_i) mod 2^64) mod (2^61−1) with seeded coefficients — the
+    uint64 product wraps at 2^64 before the Mersenne reduction (see
+    :func:`_sig_from_hashes`) — vectorized per Arrow batch as a
+    tokens x perms matrix min in numpy.
     """
     return _sig_from_hashes(_hashed_token_sets(df, id_col, text_col, shingles),
                             num_perm, seed)
@@ -275,47 +284,46 @@ def _hashed_token_sets(df: DataFrame, id_col: str, text_col: str,
                                      lambda t: F.xxhash64(t))).alias('toks'))
 
 
-def _use_sig_prefilter(tok: DataFrame, num_perm: int) -> bool:
-    """Whether the signature pre-filter pays for itself, decided from the
-    MEAN token-set size (one bounded agg on the doc-level token table —
-    the same planning-probe discipline as ``_should_broadcast``).
+def _lsh_tables(df: DataFrame, id_col: str, text_col: str, threshold: float,
+                shingles: int | None = None, num_perm: int = 96,
+                bands: int | None = None, seed: int = 42,
+                broadcast_docs: bool | None = None):
+    """The LSH set-up every MinHash-LSH path shares: (tok, buckets,
+    small, n_buckets).
 
-    Measured at sf0.1 (5.3M candidates, ~100 distinct tokens/doc): the
-    pre-filter's ``zip_with`` over 96-element signatures is evaluated
-    interpreted and cost 7.7s while the exact ``array_intersect`` pass it
-    tries to avoid cost 0.76s — a 10x pessimization on short sets. It
-    only wins when token sets are long enough (e.g. char-shingle units,
-    thousands of elements) that per-pair set intersection dominates the
-    fixed signature compare; the 8x-num_perm threshold is the measured
-    crossover's order of magnitude."""
-    mean_sz = tok.agg(F.avg(F.size('toks'))).first()[0] or 0.0
-    return mean_sz >= 8 * num_perm
+    ``bands`` defaults to the threshold-matched banding
+    (:func:`_threshold_bands`); ``broadcast_docs=None`` decides the
+    doc-table join mode from Catalyst's size estimate
+    (:func:`_should_broadcast`) and ``small`` is the matching join hint.
+    (id, toks, sig) is materialized in ONE eager ``localCheckpoint``:
+    tokenize-hash-minhash is a single narrow pipeline, each doc-level
+    table feeds 2+ plan branches (re-running the Python signature kernel
+    per branch would multiply the Arrow traffic), and per-job overhead
+    dominates small batches. ``tok`` is (id, toks) for exact
+    verification; ``buckets`` is the (id, band, bh) table, a lazy explode
+    over the checkpoint (recompute is narrow and tiny vs a job), and
+    ``n_buckets`` its row count — docs x bands, the doc count observed
+    inside the checkpoint job (no extra action)."""
+    if bands is None:
+        bands = _threshold_bands(num_perm, threshold)
+    if num_perm % bands != 0:
+        raise ValueError(f'num_perm={num_perm} must be divisible by bands={bands}')
+    if broadcast_docs is None:
+        broadcast_docs = _should_broadcast(df)
+    small = F.broadcast if broadcast_docs else (lambda x: x)
+    docs = Observation()
+    base = (_sig_from_hashes(_hashed_token_sets(df, id_col, text_col, shingles),
+                             num_perm, seed, keep_toks=True)
+            .observe(docs, F.count(F.lit(1)).alias('n'))
+            .localCheckpoint(eager=True))
+    buckets = _lsh_buckets(base.select('id', 'sig'), bands, num_perm // bands)
+    return base.select('id', 'toks'), buckets, small, docs.get['n'] * bands
 
 
-def _verify_jaccard(cand: DataFrame, sig: DataFrame, tok: DataFrame,
-                    threshold: float, num_perm: int, small,
-                    prefilter: bool | None = None) -> DataFrame:
-    """Exact-Jaccard verification of candidate (id_a, id_b) pairs.
-
-    Exact Jaccard on hashed token sets, optionally preceded by a
-    signature pre-filter (estimated Jaccard = fraction of matching
-    minhashes, cut 4 sigma below threshold so true pairs survive with
-    ~1-1e-4 probability). ``prefilter=None`` decides from the mean
-    token-set size (see :func:`_use_sig_prefilter` — on short sets the
-    pre-filter costs 10x what it saves); callers that verify repeatedly
-    against the same ``tok`` table decide once and pass it in.
-    """
-    if prefilter is None:
-        prefilter = _use_sig_prefilter(tok, num_perm)
-    est_cut = threshold - 4.0 * (threshold * (1 - threshold) / num_perm) ** 0.5
-    if prefilter and est_cut > 0:
-        sa = sig.select(F.col('id').alias('id_a'), F.col('sig').alias('sig_a'))
-        sb = sig.select(F.col('id').alias('id_b'), F.col('sig').alias('sig_b'))
-        matches = F.size(F.filter(
-            F.zip_with('sig_a', 'sig_b', lambda x, y: x == y), lambda v: v))
-        cand = (cand.join(small(sa), 'id_a').join(small(sb), 'id_b')
-                .filter(matches >= F.lit(est_cut * num_perm))
-                .select('id_a', 'id_b'))
+def _verify_jaccard(cand: DataFrame, tok: DataFrame, threshold: float,
+                    small) -> DataFrame:
+    """(id_a, id_b, jaccard) — exact-Jaccard verification of candidate
+    (id_a, id_b) pairs on hashed token sets."""
     ta = tok.select(F.col('id').alias('id_a'), F.col('toks').alias('toks_a'))
     tb = tok.select(F.col('id').alias('id_b'), F.col('toks').alias('toks_b'))
     return (cand.join(small(ta), 'id_a').join(small(tb), 'id_b')
@@ -340,44 +348,27 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'te
     verification join, which dominates cost on dup-dense corpora.
     ``num_perm=96`` is the measured sweet spot: its banding at typical
     thresholds (e.g. r=8, b=12 at t=0.8, 89%% at-threshold recall) matches
-    144 perms (r=9, b=16, 90%%) while the signature kernel, bucket explode
-    and signature pre-filter all shrink — ~3x faster end-to-end at sf0.1.
+    144 perms (r=9, b=16, 90%%) while the signature kernel and bucket
+    explode both shrink — ~3x faster end-to-end at sf0.1.
 
     Plan: signatures (narrow shuffle-free projection) -> explode to
     ``bands`` bucket keys -> self-join per bucket -> distinct candidate
     pairs -> exact Jaccard on 64-bit token hashes (xxhash64 per distinct
     token: integer ``array_intersect`` is several times cheaper than
-    string, identical up to ~1e-10/pair collisions). A signature
-    pre-filter (estimated Jaccard cut 4 sigma below threshold) is
-    inserted only when the mean token-set size makes set intersection
-    the dominant per-pair cost — on short sets the interpreted
-    ``zip_with`` compare measured 10x the intersection it avoids
-    (see :func:`_use_sig_prefilter`).
+    string, identical up to ~1e-10/pair collisions).
 
     Pair-level cost is unavoidable; DOC-level tables (signatures, token
-    sets) are only ever joined onto pairs. Both are eagerly materialized
-    (``localCheckpoint``) before the self-joins: each feeds 2+ plan
-    branches, and re-running the Python signature/tokenize kernels per
-    branch would quadruple the Arrow traffic — the linear precompute is
-    exactly what a production dedup does with its signature table.
+    sets) are only ever joined onto pairs. They are materialized once
+    (one ``localCheckpoint`` of (id, toks, sig), see :func:`_lsh_tables`)
+    before the self-joins — the linear precompute is exactly what a
+    production dedup does with its signature table.
     ``broadcast_docs=None`` decides adaptively (docs <= 2M broadcast,
     map-side join, no pair shuffle; larger corpora fall back to shuffle
     joins which AQE re-plans).
     """
-    if bands is None:
-        bands = _threshold_bands(num_perm, threshold)
-    if num_perm % bands != 0:
-        raise ValueError(f'num_perm={num_perm} must be divisible by bands={bands}')
-    rows = num_perm // bands
-    if broadcast_docs is None:
-        broadcast_docs = _should_broadcast(df)
-    small = F.broadcast if broadcast_docs else (lambda x: x)
-    tok = _hashed_token_sets(df, id_col, text_col, shingles) \
-        .localCheckpoint(eager=True)
-    sig = _sig_from_hashes(tok, num_perm, seed).localCheckpoint(eager=True)
-    pf = _use_sig_prefilter(tok, num_perm)
-
-    buckets = _lsh_buckets(sig, bands, rows)
+    tok, buckets, small, _ = _lsh_tables(df, id_col, text_col, threshold,
+                                         shingles, num_perm, bands, seed,
+                                         broadcast_docs)
     a, b = buckets.alias('a'), buckets.alias('b')
     # multi-band collisions are deduped with distinct() rather than the
     # canonical-band filter: the filter's zip_with/slice are higher-order
@@ -388,7 +379,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'te
                              (F.col('a.id') < F.col('b.id')))
              .select(F.col('a.id').alias('id_a'), F.col('b.id').alias('id_b'))
              .distinct())
-    return _verify_jaccard(cand, sig, tok, threshold, num_perm, small, pf)
+    return _verify_jaccard(cand, tok, threshold, small)
 
 
 def minhash_spanning_edges(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'text',
@@ -409,21 +400,10 @@ def minhash_spanning_edges(df: DataFrame, id_col: str = 'doc_id', text_col: str 
     clustering; use ``minhash_lsh_pairs`` when the pair list itself is the
     product.
     """
-    if bands is None:
-        bands = _threshold_bands(num_perm, threshold)
-    if num_perm % bands != 0:
-        raise ValueError(f'num_perm={num_perm} must be divisible by bands={bands}')
-    rows = num_perm // bands
-    if broadcast_docs is None:
-        broadcast_docs = _should_broadcast(df)
-    small = F.broadcast if broadcast_docs else (lambda x: x)
-    tok = _hashed_token_sets(df, id_col, text_col, shingles) \
-        .localCheckpoint(eager=True)
-    sig = _sig_from_hashes(tok, num_perm, seed).localCheckpoint(eager=True)
-    pf = _use_sig_prefilter(tok, num_perm)
-    buckets = _lsh_buckets(sig, bands, rows)
-    cand = _bucket_star_edges(buckets)
-    return _verify_jaccard(cand, sig, tok, threshold, num_perm, small, pf)
+    tok, buckets, small, _ = _lsh_tables(df, id_col, text_col, threshold,
+                                         shingles, num_perm, bands, seed,
+                                         broadcast_docs)
+    return _verify_jaccard(_bucket_star_edges(buckets), tok, threshold, small)
 
 
 def _bucket_star_edges(buckets: DataFrame, member_col: str = 'id') -> DataFrame:
@@ -437,40 +417,39 @@ def _bucket_star_edges(buckets: DataFrame, member_col: str = 'id') -> DataFrame:
             .distinct())
 
 
-def _bucket_all_pairs(buckets: DataFrame, member_col: str = 'id',
-                      max_bucket: int | None = 64) -> DataFrame:
+#: buckets with more members than this contribute star edges instead of
+#: all member pairs to a merge round (see :func:`_bucket_all_pairs`)
+_MAX_BUCKET = 64
+
+
+def _bucket_all_pairs(buckets: DataFrame, member_col: str = 'id') -> DataFrame:
     """Distinct (id_a, id_b) — EVERY member pair per (band, bh) bucket
     (quadratic per bucket). Used only where bucket membership is known to
     be small, e.g. cluster REPRESENTATIVES re-bucketed for the merge pass:
     star edges there would miss rep pairs whose shared buckets all have a
     third, non-matching rep as their minimum, because bucket minima never
-    change unless a merge fires.
+    change unless a merge fires. :func:`_rep_pairs` is the in-memory
+    twin for driver-bounded tables.
 
-    Buckets larger than ``max_bucket`` fall back to star edges: at r rows
+    Buckets larger than ``_MAX_BUCKET`` fall back to star edges: at r rows
     per band an oversized bucket is a hash-collision artifact (hundreds of
     mutually DISSIMILAR reps — mostly short documents), and enumerating
     its k²/2 pairs dominated the whole merge pass (measured at sf0.1
     t=0.9: 106 of ~58k buckets held 93% of 758k candidate pairs). A true
     near-dup pair shares ~b·t^r buckets in expectation (~5 of 12 at
     t=0.9), so it is still all-pairs-enumerated unless EVERY shared
-    bucket is oversized. ``max_bucket=None`` restores unconditional
-    all-pairs."""
-    if max_bucket is not None:
-        sizes = buckets.groupBy('band', 'bh').agg(
-            F.count(F.lit(1)).alias('__k'))
-        buckets = buckets.join(sizes, ['band', 'bh'])
-        small_b = buckets.filter(F.col('__k') <= max_bucket).drop('__k')
-        big_b = buckets.filter(F.col('__k') > max_bucket).drop('__k')
-        return (_bucket_all_pairs(small_b, member_col, None)
-                .unionByName(_bucket_star_edges(big_b, member_col))
-                .distinct())
-    a, b = buckets.alias('a'), buckets.alias('b')
-    return (a.join(b, (F.col('a.band') == F.col('b.band')) &
-                      (F.col('a.bh') == F.col('b.bh')) &
-                      (F.col(f'a.{member_col}') < F.col(f'b.{member_col}')))
-             .select(F.col(f'a.{member_col}').alias('id_a'),
-                     F.col(f'b.{member_col}').alias('id_b'))
-             .distinct())
+    bucket is oversized."""
+    sizes = buckets.groupBy('band', 'bh').agg(F.count(F.lit(1)).alias('__k'))
+    buckets = buckets.join(sizes, ['band', 'bh'])
+    small_b = buckets.filter(F.col('__k') <= _MAX_BUCKET).drop('__k')
+    big_b = buckets.filter(F.col('__k') > _MAX_BUCKET).drop('__k')
+    a, b = small_b.alias('a'), small_b.alias('b')
+    pairs = (a.join(b, (F.col('a.band') == F.col('b.band')) &
+                       (F.col('a.bh') == F.col('b.bh')) &
+                       (F.col(f'a.{member_col}') < F.col(f'b.{member_col}')))
+              .select(F.col(f'a.{member_col}').alias('id_a'),
+                      F.col(f'b.{member_col}').alias('id_b')))
+    return pairs.unionByName(_bucket_star_edges(big_b, member_col)).distinct()
 
 
 # ---------------------------------------------------------------- simhash
@@ -562,100 +541,119 @@ def _union_find_min(edges: list[tuple]) -> dict:
     return {x: find(x) for x in parent if find(x) != x}
 
 
-#: micro-batch driver path bound on collected (id, band, bh) rows —
-#: docs x bands; 150k rows ~= a 12.5k-doc batch at 12 bands. Over it,
-#: the distributed merge loop runs instead. MEASURED at the edges
-#: (tools/measure_merge_bounds.py, round 8): the driver path wins
-#: below ~12k docs on both dup-dense and all-unique corpora (2.3-4.1 s
-#: vs 3.1-4.8 s distributed) but INVERTS well before the old 500k cap
-#: (at 42k docs / 500k bucket rows: 11.8 s driver vs 5.0 s distributed,
-#: 258 MB driver peak — the bucket collect dominates), so the cap sits
-#: at the measured crossover, not at the memory ceiling.
+#: bound on (id, band, bh) rows the driver collects — docs x bands for
+#: the driver loop (150k rows ~= a 12.5k-doc batch at 12 bands), rep
+#: x bands for a probed merge round. Over it, the distributed path runs
+#: instead. MEASURED at the edges (tools/measure_merge_bounds.py, round
+#: 8): the driver path wins below ~12k docs on both dup-dense and
+#: all-unique corpora (2.3-4.1 s vs 3.1-4.8 s distributed) but INVERTS
+#: well before the old 500k cap (at 42k docs / 500k bucket rows: 11.8 s
+#: driver vs 5.0 s distributed, 258 MB driver peak — the bucket collect
+#: dominates), so the cap sits at the measured crossover, not at the
+#: memory ceiling.
 _MICROBATCH_BUCKET_CAP = 150_000
 #: and on candidate rep pairs per merge round (mirrors the edge cap)
 _MICROBATCH_CAND_CAP = 250_000
 
 
+def _rep_pairs(rows, touched: set | None) -> set | None:
+    """Candidate rep pairs of one merge round, built in memory — the
+    driver twin of :func:`_bucket_all_pairs`, used whenever the
+    rep-bucket table is driver-bounded: ALL (id_a, id_b) pairs of reps
+    sharing a bucket, star edges from the bucket minimum for buckets over
+    ``_MAX_BUCKET`` reps. ``rows`` are (rep, band, bh) triples
+    (duplicates allowed). With ``touched`` (the reps whose component
+    changed last round) only pairs involving a touched rep are kept:
+    every pair of unchanged reps sharing a bucket was already verified
+    and refuted, and an unchanged rep's bucket set is itself unchanged.
+    ``None`` when the pairs exceed ``_MICROBATCH_CAND_CAP``."""
+    bmap: dict = {}
+    for rid, band, bh in rows:
+        bmap.setdefault((band, bh), set()).add(rid)
+    cand = set()
+    for reps in bmap.values():
+        if len(reps) < 2 or (touched is not None and reps.isdisjoint(touched)):
+            continue
+        rs = sorted(reps)
+        if len(rs) <= _MAX_BUCKET:
+            pairs = itertools.combinations(rs, 2)
+        else:  # oversized hash-collision bucket: star edges
+            pairs = ((rs[0], x) for x in rs[1:])
+        cand.update(p for p in pairs if touched is None
+                    or p[0] in touched or p[1] in touched)
+        if len(cand) > _MICROBATCH_CAND_CAP:
+            return None
+    return cand
+
+
+def _merge_round(rows, touched: set | None, tok: DataFrame,
+                 threshold: float, small) -> dict | None:
+    """One merge round over a driver-held rep-bucket table: candidates
+    from :func:`_rep_pairs`, ONE Spark action verifying them, union-find
+    on the driver. Returns the {rep: absorbing rep} remap (empty when
+    nothing merges — zero candidates cost zero actions), or ``None``
+    when the candidates exceed ``_MICROBATCH_CAND_CAP``."""
+    cand = _rep_pairs(rows, touched)
+    if cand is None:
+        return None
+    if not cand:
+        return {}
+    itype = tok.schema['id'].dataType
+    cand_df = tok.sparkSession.createDataFrame(
+        sorted(cand), T.StructType([T.StructField('id_a', itype),
+                                    T.StructField('id_b', itype)]))
+    merges = _verify_jaccard(cand_df, tok, threshold, small) \
+        .select('id_a', 'id_b').collect()
+    return _union_find_min(merges)
+
+
 def _microbatch_spanning_clusters(df: DataFrame, id_col: str,
                                   edges: DataFrame, buckets: DataFrame,
-                                  sig: DataFrame, tok: DataFrame,
-                                  threshold: float, num_perm: int,
-                                  small, pf: bool,
+                                  n_buckets: int, tok: DataFrame,
+                                  threshold: float, small,
                                   merge_rounds: int) -> DataFrame | None:
     """Driver-orchestrated spanning-cluster dedup for DRIVER-BOUNDED
-    micro-batches, or ``None`` when any bound is exceeded (caller falls
-    back to the distributed path — identical semantics, more jobs).
+    inputs, or ``None`` when any bound is exceeded (caller falls back to
+    the distributed path — identical semantics, more jobs).
 
-    The distributed merge loop costs ~2 eager actions per round plus a
-    CC probe and label checkpoint — ~6 Spark actions whose payloads are
-    a few thousand rows each; on micro-batches the per-action overhead
+    The distributed path costs a checkpoint per label table and merge
+    round plus a CC probe — Spark actions whose payloads are a few
+    thousand rows each; on small inputs the per-action overhead
     (Catalyst analysis + AQE stage jobs) dominates end-to-end latency.
     Here everything EXCEPT exact-Jaccard verification moves to the
-    driver: collect the verified star edges (bounded by
-    ``_MERGE_COLLECT_CAP``) and the (id, band, bh) bucket table
-    (bounded by ``_MICROBATCH_BUCKET_CAP``), then per merge round build
-    the rep-pair candidates in memory — all pairs per bucket under the
-    same ``max_bucket=64`` cap with the same star-edge fallback as
-    :func:`_bucket_all_pairs`, the same touched-rep pruning — and spend
-    exactly ONE Spark action verifying them against the checkpointed
-    (sig, toks) base. Zero candidates in a round = zero Spark actions.
-    Output is row-identical to the distributed path (parity-tested in
-    tests/test_scale.py); only job count differs. At 100 TB the bounds
-    never hold and the distributed loop below remains the scale path.
+    driver: collect the (id, band, bh) bucket table when its observed
+    row count ``n_buckets`` fits ``_MICROBATCH_BUCKET_CAP`` (a narrow
+    read of the checkpointed base), then probe the verified star edges
+    (bounded by ``_MERGE_COLLECT_CAP``, collected without a
+    checkpoint), then run every merge round with
+    :func:`_merge_round` — candidates in memory, exactly ONE Spark action
+    verifying them. Output is row-identical to the distributed path
+    (parity-tested in tests/test_scale.py); only job count differs. At
+    100 TB the bounds never hold and the distributed loop remains the
+    scale path.
     """
-    edge_rows = edges.limit(_MERGE_COLLECT_CAP + 1).collect()
+    if n_buckets > _MICROBATCH_BUCKET_CAP:
+        return None
+    bucket_rows = buckets.collect()
+    edge_rows = edges.select('id_a', 'id_b').limit(_MERGE_COLLECT_CAP + 1).collect()
     if len(edge_rows) > _MERGE_COLLECT_CAP:
         return None
-    bucket_rows = buckets.limit(_MICROBATCH_BUCKET_CAP + 1).collect()
-    if len(bucket_rows) > _MICROBATCH_BUCKET_CAP:
-        return None
-    remap = _union_find_min([(r['id_a'], r['id_b']) for r in edge_rows])
-    comp_of = {}
-    for r in bucket_rows:  # every doc appears (sig always explodes)
-        i = r['id']
-        comp_of[i] = remap.get(i, i)
+    remap = _union_find_min(edge_rows)
+    # every doc appears (sig always explodes)
+    comp_of = {i: remap.get(i, i) for i, _, _ in bucket_rows}
     touched = None
     for _ in range(merge_rounds):
-        bmap: dict = {}
-        for r in bucket_rows:
-            bmap.setdefault((r['band'], r['bh']), set()).add(comp_of[r['id']])
-        cand = set()
-        for reps in bmap.values():
-            if len(reps) < 2:
-                continue
-            if touched is not None and not (reps & touched):
-                continue
-            rs = sorted(reps)
-            if len(rs) <= 64:  # _bucket_all_pairs max_bucket
-                pairs = [(rs[i], rs[j]) for i in range(len(rs))
-                         for j in range(i + 1, len(rs))]
-            else:  # oversized hash-collision bucket: star edges
-                pairs = [(rs[0], x) for x in rs[1:]]
-            for p in pairs:
-                if touched is None or p[0] in touched or p[1] in touched:
-                    cand.add(p)
-            if len(cand) > _MICROBATCH_CAND_CAP:
-                return None  # degenerate: let the distributed loop pay
-        if not cand:
+        m2 = _merge_round(((comp_of[i], band, bh) for i, band, bh in bucket_rows),
+                          touched, tok, threshold, small)
+        if m2 is None:
+            return None  # degenerate: let the distributed loop pay
+        if not m2:
             break
-        itype = sig.schema['id'].dataType
-        cand_df = sig.sparkSession.createDataFrame(
-            sorted(cand), T.StructType([T.StructField('id_a', itype),
-                                        T.StructField('id_b', itype)]))
-        merges = _verify_jaccard(cand_df, sig, tok, threshold, num_perm,
-                                 small, pf).select('id_a', 'id_b').collect()
-        if not merges:
-            break
-        m2 = _union_find_min([(r['id_a'], r['id_b']) for r in merges])
         touched = set(m2) | set(m2.values())
-        for i, c in comp_of.items():
-            comp_of[i] = m2.get(c, c)
-    sizes: dict = {}
-    for c in comp_of.values():
-        sizes[c] = sizes.get(c, 0) + 1
-    itype = sig.schema['id'].dataType
-    reps_df = sig.sparkSession.createDataFrame(
-        sorted(sizes.items()),
+        comp_of = {i: m2.get(c, c) for i, c in comp_of.items()}
+    itype = tok.schema['id'].dataType
+    reps_df = tok.sparkSession.createDataFrame(
+        sorted(Counter(comp_of.values()).items()),
         T.StructType([T.StructField(id_col, itype),
                       T.StructField('cluster_size', T.LongType())]))
     return df.join(F.broadcast(reps_df), id_col, 'inner')
@@ -663,8 +661,7 @@ def _microbatch_spanning_clusters(df: DataFrame, id_col: str,
 
 def connected_components(pairs: DataFrame, ids: DataFrame,
                          max_iterations: int = 12,
-                         collect_cap: int | None = None,
-                         probe_first: bool = False) -> DataFrame:
+                         collect_cap: int | None = None) -> DataFrame:
     """(id, component) — connected components over an undirected edge list
     (columns ``id_a``/``id_b``): min-label propagation with pointer
     jumping, so rounds grow the reached radius exponentially
@@ -678,10 +675,11 @@ def connected_components(pairs: DataFrame, ids: DataFrame,
     candidates and only true near-dups survive verification), but at
     100 TB they still exceed any driver cap, so the distributed
     iteration below remains the scale path; the probe itself terminates
-    early and never materializes more than cap+1 rows. By default the
-    edge pipeline is checkpointed BEFORE the probe so expensive
-    upstreams run exactly once; ``probe_first=True`` lets micro-batch
-    callers (the streaming path) skip that checkpoint job.
+    early and never materializes more than cap+1 rows. The edge
+    pipeline is checkpointed BEFORE the probe so expensive upstreams
+    (typically the LSH bucket/verify chain, whose shuffles limit() cannot
+    short-circuit) run exactly once whether the input lands under or
+    over the cap.
 
     Only nodes that appear in an edge enter the iteration — in a dedup
     corpus most documents are singletons, and carrying them through every
@@ -701,23 +699,11 @@ def connected_components(pairs: DataFrame, ids: DataFrame,
         collect_cap = _MERGE_COLLECT_CAP
     base = pairs.select('id_a', 'id_b')
     if collect_cap:
-        # Default: checkpoint FIRST, probe the materialized frame — the
-        # upstream pipeline (typically the LSH bucket/verify chain,
-        # whose shuffles limit() cannot short-circuit) is evaluated
-        # exactly once whether the input lands under or over the cap;
-        # the probe then reads cached blocks. ``probe_first=True`` is
-        # the opt-in for callers that KNOW their input is micro-batch-
-        # sized (the streaming path): it skips the checkpoint job on
-        # the under-cap fast path — one bounded probe job total — at
-        # the cost of a double evaluation if the batch overflows the
-        # cap after all (round-7 ADVICE).
-        if not probe_first:
-            base = base.localCheckpoint(eager=True)
+        base = base.localCheckpoint(eager=True)
         probe = base.limit(collect_cap + 1).collect()
         if len(probe) <= collect_cap:
-            edge_list = [(r['id_a'], r['id_b']) for r in probe]
-            remap = _union_find_min(edge_list)
-            nodes = {x for e in edge_list for x in e}
+            remap = _union_find_min(probe)
+            nodes = {x for e in probe for x in e}
             itype = pairs.schema['id_a'].dataType
             labels = pairs.sparkSession.createDataFrame(
                 [(x, remap.get(x, x)) for x in sorted(nodes)],
@@ -727,11 +713,6 @@ def connected_components(pairs: DataFrame, ids: DataFrame,
                        .join(labels.select('id'), 'id', 'left_anti')
                        .select('id', F.col('id').alias('component')))
             return labels.unionByName(singles)
-        # over cap on the probe-first path: materialize once before the
-        # double reference below (already checkpointed on the default
-        # path)
-        if probe_first:
-            base = base.localCheckpoint(eager=True)
     edges = base.union(base.select(F.col('id_b').alias('id_a'),
                                    F.col('id_a').alias('id_b')))
     edges = edges.localCheckpoint(eager=True)
@@ -787,8 +768,6 @@ def dedup_clusters(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'text'
                    threshold: float = 0.8, pair_strategy: str = 'spanning',
                    merge_rounds: int = 2, shingles: int | None = None,
                    _state_out: dict | None = None,
-                   cc_probe_first: bool = False,
-                   prefilter: bool | None = None,
                    **lsh_kw) -> DataFrame:
     """One representative per near-duplicate cluster: MinHash-LSH edges ->
     connected components -> keep the minimum id of each component.
@@ -804,255 +783,138 @@ def dedup_clusters(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'text'
     all-pairs would have connected, so after components are labeled a
     merge pass re-buckets the REPRESENTATIVES: ALL pairs of
     representatives sharing an LSH bucket are verified (they are few —
-    members that verified already merged; hash-collision buckets above
-    ``_bucket_all_pairs``'s ``max_bucket`` cap fall back to star edges)
-    and any verified pair merges its two components. The pass repeats
-    until no merge fires (up to ``merge_rounds`` times); at convergence
-    no two kept documents sharing a NON-OVERSIZED LSH bucket are
-    near-duplicates at the threshold — the pairs-path invariant up to
-    LSH recall and the oversized-bucket fallback (a true pair shares
-    ~b·t^r buckets, so it escapes only if every one is oversized).
+    members that verified already merged; hash-collision buckets over
+    ``_MAX_BUCKET`` reps fall back to star edges) and any verified pair
+    merges its two components. The pass repeats until no merge fires (up
+    to ``merge_rounds`` times); at convergence no two kept documents
+    sharing a NON-OVERSIZED LSH bucket are near-duplicates at the
+    threshold — the pairs-path invariant up to LSH recall and the
+    oversized-bucket fallback (a true pair shares ~b·t^r buckets, so it
+    escapes only if every one is oversized).
 
-    ``cc_probe_first=True`` is the micro-batch opt-in forwarded to
-    :func:`connected_components`: probe the edge count before
-    checkpointing (one job saved when the edges fit the driver cap, a
-    double evaluation if they don't — only the streaming path, whose
-    batches are bounded, should set it). (Making the merge loop's
-    label/bucket checkpoints lazy under the same flag was tried and
-    measured 15-35% SLOWER on sf0.1 micro-batches, counterbalanced
-    ABBA, round 7: the re-analysis + recompute of the multiply-
-    referenced comp/rep_buckets plans exceeds the per-job overhead the
-    skipped checkpoints save. They stay eager in every mode.)
+    Where the work runs is chosen from observed sizes and bounded
+    probes, never from a flag: when the (id, band, bh) bucket table and
+    the verified star edges fit the driver caps, components and merge
+    rounds run on the driver (:func:`_microbatch_spanning_clusters`);
+    otherwise the edges are checkpointed into
+    :func:`connected_components` and each merge round counts its
+    checkpointed representative-bucket table, building candidates in
+    memory (:func:`_rep_pairs`) when it fits ``_MICROBATCH_BUCKET_CAP``
+    and with :func:`_bucket_all_pairs` when it does not. Every mode is
+    row-identical. (Making the merge loop's label/bucket checkpoints lazy
+    was tried and measured 15-35% SLOWER on sf0.1 micro-batches,
+    counterbalanced ABBA, round 7: the re-analysis + recompute of the
+    multiply-referenced comp/rep_buckets plans exceeds the per-job
+    overhead the skipped checkpoints save.)
 
-    ``prefilter=None`` probes the mean token-set size once per call to
-    decide whether the signature pre-filter pays for itself (see
-    :func:`_use_sig_prefilter`); callers that run many batches of the
-    same corpus (the streaming writer) pass the first batch's decision
-    back in to skip the per-batch probe job. The decision is also
-    surfaced via ``_state_out['prefilter']``.
+    ``_state_out`` receives the materialized (id, toks) and (id, band,
+    bh) tables as ``tok`` and ``buckets``, for callers that need them
+    downstream (the streaming signature-store writer).
     """
     if pair_strategy == 'pairs':
         pairs = minhash_lsh_pairs(df, id_col, text_col, threshold,
                                   shingles=shingles, **lsh_kw)
-        comp = connected_components(pairs, df.select(id_col),
-                                    probe_first=cc_probe_first)
+        comp = connected_components(pairs, df.select(id_col))
     elif pair_strategy == 'spanning':
-        num_perm = lsh_kw.get('num_perm', 96)
-        bands = lsh_kw.get('bands') or _threshold_bands(num_perm, threshold)
-        if num_perm % bands != 0:
-            raise ValueError(f'num_perm={num_perm} must be divisible by bands={bands}')
-        rows = num_perm // bands
-        seed = lsh_kw.get('seed', 42)
-        broadcast_docs = lsh_kw.get('broadcast_docs')
-        if broadcast_docs is None:
-            broadcast_docs = _should_broadcast(df)
-        small = F.broadcast if broadcast_docs else (lambda x: x)
-        # ONE materialization of (id, toks, sig): tokenize-hash-minhash
-        # is a single narrow pipeline, and per-job overhead dominates
-        # small batches (the streaming micro-batch path), so fusing the
-        # former tok/sig/buckets checkpoint trio into one job is a
-        # measured win; buckets stay a lazy explode over the
-        # checkpointed base (recompute is narrow and tiny vs a job)
-        base = _sig_from_hashes(
-            _hashed_token_sets(df, id_col, text_col, shingles),
-            num_perm, seed, keep_toks=True).localCheckpoint(eager=True)
-        tok = base.select('id', 'toks')
-        sig = base.select('id', 'sig')
-        pf = prefilter if prefilter is not None \
-            else _use_sig_prefilter(tok, num_perm)
-        buckets = _lsh_buckets(sig, bands, rows)
+        tok, buckets, small, n_buckets = _lsh_tables(
+            df, id_col, text_col, threshold, shingles, **lsh_kw)
         if _state_out is not None:
-            # hand the already-materialized per-document state to callers
-            # that need it downstream (the streaming signature-store
-            # writer) so they don't re-run the tokenize/minhash/bucket
-            # pass over the kept subset
-            _state_out.update(tok=tok, sig=sig, buckets=buckets,
-                              bands=bands, rows=rows, prefilter=pf)
-        edges = _verify_jaccard(_bucket_star_edges(buckets), sig, tok,
-                                threshold, num_perm, small, pf)
-        if cc_probe_first:
-            # micro-batch opt-in: the whole CC + merge loop runs on the
-            # driver (one Spark action per merge round, for the Jaccard
-            # verify) when edges and buckets fit the driver bounds
-            out = _microbatch_spanning_clusters(
-                df, id_col, edges, buckets, sig, tok, threshold,
-                num_perm, small, pf, merge_rounds)
-            if out is not None:
-                return out
-        comp = connected_components(edges, df.select(id_col),
-                                    probe_first=cc_probe_first) \
+            _state_out.update(tok=tok, buckets=buckets)
+        edges = _verify_jaccard(_bucket_star_edges(buckets), tok, threshold, small)
+        out = _microbatch_spanning_clusters(df, id_col, edges, buckets,
+                                            n_buckets, tok, threshold, small,
+                                            merge_rounds)
+        if out is not None:
+            return out
+        comp = connected_components(edges, df.select(id_col)) \
             .localCheckpoint(eager=True)
-        touched = None  # round 1 checks all rep pairs; later rounds prune
-        touched_vals = None  # driver-known touched labels (bounded list)
+        ctype = comp.schema['component'].dataType
+        # reps whose component changed last round, as a frame (column t)
+        # and — when the merge was resolved on the driver — as a set;
+        # None in round 1, which checks every rep pair
+        touched, tset = None, None
         for _ in range(merge_rounds):
-            # representatives (= component labels) back into their buckets;
-            # ALL pairs of representatives sharing a bucket are verified
-            # (star edges would miss pairs whose shared buckets all have a
-            # third, non-matching rep as their min). Reps per bucket are
-            # few — members that verified already merged — so the
-            # per-bucket product is bounded.
+            # representatives (= component labels) back into their buckets
             rep_buckets = (buckets.join(comp, 'id')
                            .select(F.col('component').alias('rid'), 'band', 'bh')
                            .distinct())
             if touched is not None:
-                # rounds after the first only need pairs involving a rep
-                # whose component changed last round: every pair of
-                # UNCHANGED reps sharing a bucket was already verified
-                # (and refuted) by the previous all-pairs round — and an
-                # unchanged rep's bucket set is itself unchanged. Restrict
-                # to buckets holding a touched rep BEFORE the quadratic
-                # pair step, then to pairs involving a touched rep.
-                if touched_vals is not None and len(touched_vals) <= 5000:
-                    # small driver-known list: a literal isin stays in
-                    # codegen and beats any join
-                    hot = (rep_buckets.filter(F.col('rid').isin(touched_vals))
-                           .select('band', 'bh').distinct())
-                else:
-                    # larger sets: broadcast-hash semi join (explicit hint
-                    # when the set is driver-bounded by the collect cap)
-                    tb = touched.withColumnRenamed('t', 'rid')
-                    if touched_vals is not None:
-                        tb = F.broadcast(tb)
-                    hot = (rep_buckets.join(tb, 'rid', 'left_semi')
-                           .select('band', 'bh').distinct())
+                # only buckets holding a touched rep can yield a new pair
+                # (see _rep_pairs): restrict BEFORE the quadratic pair step
+                hot = (rep_buckets.join(touched.withColumnRenamed('t', 'rid'),
+                                        'rid', 'left_semi')
+                       .select('band', 'bh').distinct())
                 rep_buckets = rep_buckets.join(hot, ['band', 'bh'], 'left_semi')
-            rep_cand = None
-            if touched_vals is not None:
-                # rounds after the first with a DRIVER-KNOWN touched set:
-                # the hot-restricted rep-bucket table is bounded (touched
-                # reps x bands buckets, whole buckets kept), so build the
-                # candidate pairs in memory — same max_bucket=64 split,
-                # star fallback and touched filter as the distributed
-                # _bucket_all_pairs branch below — and spend Spark
-                # actions only on the exact-Jaccard verify (r13: replaces
-                # the rep_buckets checkpoint + 4-branch pair chain, ~8
-                # AQE stage jobs per round; zero candidates = zero jobs)
-                probe = rep_buckets.limit(
-                    _MICROBATCH_BUCKET_CAP + 1).collect()
-                if len(probe) <= _MICROBATCH_BUCKET_CAP:
-                    tset = set(touched_vals)
-                    bmap: dict = {}
-                    for r in probe:
-                        bmap.setdefault((r['band'], r['bh']),
-                                        set()).add(r['rid'])
-                    cand = set()
-                    overflow = False
-                    for reps_in_b in bmap.values():
-                        if len(reps_in_b) < 2:
-                            continue
-                        rs = sorted(reps_in_b)
-                        if len(rs) <= 64:  # _bucket_all_pairs max_bucket
-                            pp = [(rs[i], rs[j]) for i in range(len(rs))
-                                  for j in range(i + 1, len(rs))]
-                        else:  # oversized bucket: star edges
-                            pp = [(rs[0], x) for x in rs[1:]]
-                        for p in pp:
-                            if p[0] in tset or p[1] in tset:
-                                cand.add(p)
-                        if len(cand) > _MICROBATCH_CAND_CAP:
-                            overflow = True
-                            break
-                    if not overflow:
-                        if not cand:
-                            break
-                        ctype0 = comp.schema['component'].dataType
-                        rep_cand = comp.sparkSession.createDataFrame(
-                            sorted(cand),
-                            T.StructType([T.StructField('id_a', ctype0),
-                                          T.StructField('id_b', ctype0)]))
-                        # falls through to the shared verify/apply below;
-                        # the touched isin re-filter there is a no-op on
-                        # this already-filtered local relation
-            if rep_cand is None:
-                # materialize: the bucket-size split inside
-                # _bucket_all_pairs references this plan four times —
-                # uncheckpointed, Catalyst re-analyzes the join+distinct
-                # per branch per round (lazy variants measured 15-35%
-                # SLOWER on micro-batches, ABBA round 7 — the
-                # recompute+re-analysis exceeds the job cost)
-                rep_buckets = rep_buckets.localCheckpoint(eager=True)
+            # materialize, counting rows inside the same job: a table
+            # that fits the cap is then read back for the in-memory round
+            # without recomputing the join+distinct, and one that does not
+            # feeds _bucket_all_pairs, whose bucket-size split references
+            # it four times (uncheckpointed, Catalyst re-analyzes it per
+            # branch per round)
+            n_rep = Observation()
+            rep_buckets = (rep_buckets.observe(n_rep, F.count(F.lit(1)).alias('n'))
+                           .localCheckpoint(eager=True))
+            remap = None
+            if n_rep.get['n'] <= _MICROBATCH_BUCKET_CAP and (
+                    touched is None or tset is not None):
+                remap = _merge_round(rep_buckets.collect(), tset, tok,
+                                     threshold, small)
+            if remap is None:
                 rep_cand = _bucket_all_pairs(rep_buckets, member_col='rid')
-            if touched is not None:
-                if touched_vals is not None and len(touched_vals) <= 5000:
-                    rep_cand = rep_cand.filter(
-                        F.col('id_a').isin(touched_vals) |
-                        F.col('id_b').isin(touched_vals))
-                else:
-                    # one linear pass: flag both endpoints via two hash
-                    # left joins and filter the OR — no union, no pair
-                    # distinct, no double-reference of the pair DAG
-                    # (previously two semi-joins + distinct, the source
-                    # of the superlinear shuffle term in SCALE.md)
-                    bhint = (F.broadcast if touched_vals is not None
-                             else (lambda x: x))
+                if touched is not None:
+                    # keep pairs with a touched endpoint: flag both
+                    # endpoints with hash left joins and filter the OR
                     ta = touched.select(F.col('t').alias('id_a'),
                                         F.lit(True).alias('_ta'))
-                    tb2 = touched.select(F.col('t').alias('id_b'),
-                                         F.lit(True).alias('_tb'))
-                    rep_cand = (rep_cand
-                                .join(bhint(ta), 'id_a', 'left')
-                                .join(bhint(tb2), 'id_b', 'left')
+                    tb = touched.select(F.col('t').alias('id_b'),
+                                        F.lit(True).alias('_tb'))
+                    rep_cand = (rep_cand.join(ta, 'id_a', 'left')
+                                .join(tb, 'id_b', 'left')
                                 .filter(F.col('_ta').isNotNull() |
                                         F.col('_tb').isNotNull())
                                 .drop('_ta', '_tb'))
-            merges = _verify_jaccard(rep_cand, sig, tok, threshold,
-                                     num_perm, small, pf) \
-                .select('id_a', 'id_b')
-            # probe-collect directly: in the common (bounded) path the
-            # merge edges are consumed on the driver and the frame is
-            # never re-read, so a checkpoint would be a wasted job; the
-            # degenerate over-cap path re-materializes below
-            edge_rows = merges.limit(_MERGE_COLLECT_CAP + 1).collect()
-            if not edge_rows:
+                merges = _verify_jaccard(rep_cand, tok, threshold, small) \
+                    .select('id_a', 'id_b')
+                # probe-collect directly: in the common (bounded) case the
+                # merge edges are consumed on the driver and the frame is
+                # never re-read, so a checkpoint would be a wasted job
+                edge_rows = merges.limit(_MERGE_COLLECT_CAP + 1).collect()
+                if len(edge_rows) > _MERGE_COLLECT_CAP:
+                    merges = merges.localCheckpoint(eager=True)
+                    rep_map = (connected_components(
+                        merges, comp.select(F.col('component')).distinct(),
+                        collect_cap=0)  # known > cap: skip the probe
+                        .withColumnRenamed('component', 'supercomp')
+                        .withColumnRenamed('id', 'component'))
+                    # reps whose label changed (absorbed into another
+                    # component) plus the absorbing labels themselves
+                    moved = rep_map.filter(F.col('component') != F.col('supercomp'))
+                    touched = (moved.select(F.col('component').alias('t'))
+                               .unionByName(moved.select(F.col('supercomp').alias('t')))
+                               .distinct().localCheckpoint(eager=True))
+                    tset = None
+                    comp = (comp.join(rep_map, 'component')
+                            .select('id', F.col('supercomp').alias('component'))
+                            .localCheckpoint(eager=True))
+                    continue
+                remap = _union_find_min(edge_rows)
+            if not remap:
                 break
-            if len(edge_rows) <= _MERGE_COLLECT_CAP:
-                # merge edges are representative REPAIRS — tiny relative
-                # to the corpus by construction (bounded by rep count).
-                # Union-find on the driver + one broadcast-mapped join
-                # replaces a whole distributed CC round (~10 jobs) with
-                # one; the distributed path below remains for the
-                # degenerate huge-merge case.
-                remap = _union_find_min(
-                    [(r['id_a'], r['id_b']) for r in edge_rows])
-                if not remap:
-                    break
-                ctype = comp.schema['component'].dataType
-                map_df = comp.sparkSession.createDataFrame(
-                    list(remap.items()),
-                    T.StructType([T.StructField('component', ctype),
-                                  T.StructField('__super', ctype)]))
-                t_vals = sorted({v for kv in remap.items() for v in kv})
-                touched = comp.sparkSession.createDataFrame(
-                    [(v,) for v in t_vals],
-                    T.StructType([T.StructField('t', ctype)]))
-                # driver-known: the use sites pick isin (small lists,
-                # stays in codegen) or an explicit broadcast join
-                # (larger — a huge IN-list would dwarf the join in
-                # Catalyst analysis time)
-                touched_vals = t_vals
-                comp = (comp.join(F.broadcast(map_df), 'component', 'left')
-                        .select('id', F.coalesce('__super', 'component')
-                                .alias('component'))
-                        .localCheckpoint(eager=True))
-                continue
-            merges = merges.localCheckpoint(eager=True)
-            rep_map = (connected_components(
-                merges, comp.select(F.col('component')).distinct(),
-                collect_cap=0)  # known > cap: skip the probe
-                .withColumnRenamed('component', 'supercomp')
-                .withColumnRenamed('id', 'component'))
-            # reps whose label changed (absorbed into another component)
-            # plus the absorbing labels themselves
-            touched = (rep_map
-                       .filter(F.col('component') != F.col('supercomp'))
-                       .select(F.col('component').alias('t'))
-                       .unionByName(rep_map
-                                    .filter(F.col('component') != F.col('supercomp'))
-                                    .select(F.col('supercomp').alias('t')))
-                       .distinct().localCheckpoint(eager=True))
-            touched_vals = None
-            comp = (comp.join(rep_map, 'component')
-                    .select('id', F.col('supercomp').alias('component'))
+            # merge edges are representative REPAIRS — tiny relative to
+            # the corpus by construction (bounded by rep count): a driver
+            # union-find + one broadcast-mapped join replaces a whole
+            # distributed CC round (~10 jobs)
+            map_df = comp.sparkSession.createDataFrame(
+                list(remap.items()),
+                T.StructType([T.StructField('component', ctype),
+                              T.StructField('__super', ctype)]))
+            tset = set(remap) | set(remap.values())
+            touched = comp.sparkSession.createDataFrame(
+                [(v,) for v in sorted(tset)],
+                T.StructType([T.StructField('t', ctype)]))
+            comp = (comp.join(F.broadcast(map_df), 'component', 'left')
+                    .select('id', F.coalesce('__super', 'component')
+                            .alias('component'))
                     .localCheckpoint(eager=True))
     else:
         raise ValueError(f'unknown pair_strategy {pair_strategy!r}')
@@ -1118,13 +980,7 @@ def streaming_neardup_dedup(spark, in_dir: str, schema, out_dir: str,
         bands = _threshold_bands(num_perm, threshold)
     if num_perm % bands != 0:
         raise ValueError(f'num_perm={num_perm} must be divisible by bands={bands}')
-    rows = num_perm // bands
     import os
-
-    # the prefilter decision depends on the corpus token profile, not
-    # the batch: decide on the first micro-batch, reuse on the rest
-    # (one fewer probe job per subsequent batch)
-    pf_memo: dict = {}
 
     def _process(batch_df: DataFrame, batch_id: int):
         if batch_df.isEmpty():
@@ -1142,13 +998,7 @@ def streaming_neardup_dedup(spark, in_dir: str, schema, out_dir: str,
         kept = dedup_clusters(batch_df, id_col, text_col, threshold,
                               pair_strategy='spanning', num_perm=num_perm,
                               bands=bands, seed=seed, shingles=shingles,
-                              _state_out=state,
-                              # micro-batch edges fit the driver cap:
-                              # probe-first saves the checkpoint job
-                              cc_probe_first=True,
-                              prefilter=pf_memo.get('pf')
-                              ).drop('cluster_size')
-        pf_memo['pf'] = state['prefilter']
+                              _state_out=state).drop('cluster_size')
         # reuse the tokenize/minhash/bucket state dedup_clusters already
         # materialized for the whole batch: the final survivor-id set is
         # materialized ONCE (it is micro-batch-bounded and id-only), so
@@ -1188,13 +1038,17 @@ def streaming_neardup_dedup(spark, in_dir: str, schema, out_dir: str,
         _label('writes')
         # three independent sinks (different directories, disjoint
         # plans off materialized inputs): overlap them so the tail of
-        # one write back-fills cores freed by another (guide §2.6);
-        # job descriptions are thread-local, so re-label per thread
+        # one write back-fills cores freed by another (guide §2.6).
+        # inheritable_thread_target (PySpark's thread target for
+        # pinned-thread mode) copies the local properties captured here,
+        # the job label included, into each worker's JVM thread
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark import inheritable_thread_target
+
+        @inheritable_thread_target(sess)
         def _write(df_path):
             df_, path = df_path
-            _label('writes')
             df_.write.mode('overwrite').parquet(path)
 
         with ThreadPoolExecutor(max_workers=3) as pool:
@@ -1681,15 +1535,10 @@ def dedup_against(df: DataFrame, ref: DataFrame, id_col: str = 'doc_id',
                 .drop('_fp'))
     if mode != 'near':
         raise ValueError(f"mode={mode!r}: use 'exact' or 'near'")
-    if bands is None:
-        bands = _threshold_bands(num_perm, threshold)
-    rows = num_perm // bands
-    tok_n = _hashed_token_sets(df, id_col, text_col, shingles) \
-        .localCheckpoint(eager=True)
-    tok_r = _hashed_token_sets(ref, id_col, text_col, shingles) \
-        .localCheckpoint(eager=True)
-    b_n = _lsh_buckets(_sig_from_hashes(tok_n, num_perm, seed), bands, rows)
-    b_r = _lsh_buckets(_sig_from_hashes(tok_r, num_perm, seed), bands, rows)
+    tok_n, b_n, _, _ = _lsh_tables(df, id_col, text_col, threshold, shingles,
+                                   num_perm, bands, seed, broadcast_docs=False)
+    tok_r, b_r, _, _ = _lsh_tables(ref, id_col, text_col, threshold, shingles,
+                                   num_perm, bands, seed, broadcast_docs=False)
     cand = (b_n.select(F.col('id').alias('id_a'), 'band', 'bh')
             .join(b_r.select(F.col('id').alias('id_b'), 'band', 'bh'),
                   ['band', 'bh'])

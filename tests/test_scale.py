@@ -827,19 +827,13 @@ def test_connected_components_matches_union_find(spark):
     for i in range(120):
         groups.setdefault(find(i), []).append(i)
     exp = {i: min(g) for g in groups.values() for i in g}
-    for cap in (None, 0):  # driver union-find / distributed iteration
+    # driver union-find / distributed iteration / a probe that overflows
+    # its cap and falls through to the distributed iteration
+    for cap in (None, 0, 5):
         got = {r['id']: r['component']
                for r in connected_components(pairs, ids,
                                              collect_cap=cap).collect()}
         assert got == exp, f'collect_cap={cap}'
-    # probe_first (streaming micro-batch opt-in, round-7 ADVICE) must be
-    # output-identical on both sides of the cap: under (driver path) and
-    # over (falls through to the distributed iteration)
-    for cap in (1000, 5):
-        got = {r['id']: r['component']
-               for r in connected_components(pairs, ids, collect_cap=cap,
-                                             probe_first=True).collect()}
-        assert got == exp, f'probe_first cap={cap}'
 
 
 def test_connected_components_fractional_ids(spark):
@@ -897,21 +891,23 @@ def test_dedup_clusters_keeps_no_neardup_pair(spark):
 
 
 def test_dedup_clusters_driver_path_parity(spark, monkeypatch):
-    """The micro-batch driver-orchestrated merge loop (cc_probe_first)
-    must be ROW-IDENTICAL to the distributed path — on sf0.01's
-    dup-dense corpus (multi-round merges fire) and on the synthetic
-    clique — and must fall back to the distributed path with identical
-    output when either driver bound is exceeded."""
+    """The driver-orchestrated loop (taken when the bucket table and the
+    star edges fit the driver caps) must be ROW-IDENTICAL to the
+    distributed path — on sf0.01's dup-dense corpus (multi-round merges
+    fire) and on the synthetic clique — and must fall back to the
+    distributed path with identical output when any driver bound is
+    exceeded."""
     import erde_spark.scale.dedup as D
     for docs in (_clique_corpus(spark),
                  spark.read.parquet('/root/testdata/sf0.01/documents.parquet')):
+        drv = sorted((r['doc_id'], r['cluster_size']) for r in
+                     D.dedup_clusters(docs, threshold=0.9,
+                                      pair_strategy='spanning').collect())
+        monkeypatch.setattr(D, '_MICROBATCH_BUCKET_CAP', 0)
         dist = sorted((r['doc_id'], r['cluster_size']) for r in
                       D.dedup_clusters(docs, threshold=0.9,
                                        pair_strategy='spanning').collect())
-        drv = sorted((r['doc_id'], r['cluster_size']) for r in
-                     D.dedup_clusters(docs, threshold=0.9,
-                                      pair_strategy='spanning',
-                                      cc_probe_first=True).collect())
+        monkeypatch.undo()
         assert drv == dist
     # force each driver bound to 0: _microbatch_spanning_clusters must
     # return None and the distributed fallback must produce the same rows
@@ -924,20 +920,17 @@ def test_dedup_clusters_driver_path_parity(spark, monkeypatch):
         monkeypatch.setattr(D, attr, 0 if attr != '_MERGE_COLLECT_CAP' else 1)
         got = sorted((r['doc_id'], r['cluster_size']) for r in
                      D.dedup_clusters(docs, threshold=0.9,
-                                      pair_strategy='spanning',
-                                      cc_probe_first=True).collect())
+                                      pair_strategy='spanning').collect())
         assert got == exp, attr
         monkeypatch.undo()
 
 
 def test_dedup_clusters_driver_merge_rounds_parity(spark, monkeypatch):
-    """r13: merge rounds AFTER the first with a driver-known touched set
-    build rep-pair candidates in memory (bounded collect of the
-    hot-restricted rep-bucket table) instead of the distributed
-    _bucket_all_pairs chain. Forcing the probe cap to 0 disables the
-    driver rounds (every round distributed); both modes must be
-    row-identical on the dup-dense corpus where multi-round merges
-    fire, and on the synthetic clique."""
+    """Forcing the bucket cap to 0 disables every driver-side candidate
+    build (the driver loop and the in-memory merge rounds, so every round
+    runs the distributed _bucket_all_pairs chain); with merge_rounds=3
+    both modes must be row-identical on the dup-dense corpus where
+    multi-round merges fire, and on the synthetic clique."""
     import erde_spark.scale.dedup as D
     for docs in (_clique_corpus(spark),
                  spark.read.parquet('/root/testdata/sf0.01/documents.parquet')):
@@ -952,6 +945,59 @@ def test_dedup_clusters_driver_merge_rounds_parity(spark, monkeypatch):
                                        merge_rounds=3).collect())
         monkeypatch.undo()
         assert drv == dist
+
+
+def test_dedup_clusters_three_modes_parity(spark, monkeypatch):
+    """The spanning path picks where it runs from observed table sizes,
+    and all three modes are row-identical on the synthetic clique and on
+    sf0.01:
+    (1) the driver loop (the bucket table fits _MICROBATCH_BUCKET_CAP);
+    (2) distributed components with driver-built merge rounds (a cap
+    between the rep-bucket and the full bucket row count); (3) fully
+    distributed (caps of 0). Spies record which mode ran."""
+    import erde_spark.scale.dedup as D
+    orig_loop, orig_rep, orig_all = (D._microbatch_spanning_clusters,
+                                     D._rep_pairs, D._bucket_all_pairs)
+    seen = {}
+
+    def loop(*a, **kw):
+        out = orig_loop(*a, **kw)
+        seen['driver_loop'] = out is not None
+        return out
+
+    def rep(*a, **kw):
+        seen['rep_pairs'] = True
+        return orig_rep(*a, **kw)
+
+    def all_pairs(buckets, *a, **kw):
+        # the first call sees round 1's full rep-bucket table
+        seen.setdefault('rep_rows', buckets.count())
+        return orig_all(buckets, *a, **kw)
+
+    def run(docs, **caps):
+        seen.clear()
+        with monkeypatch.context() as m:
+            m.setattr(D, '_microbatch_spanning_clusters', loop)
+            m.setattr(D, '_rep_pairs', rep)
+            m.setattr(D, '_bucket_all_pairs', all_pairs)
+            for attr, cap in caps.items():
+                m.setattr(D, attr, cap)
+            return sorted((r['doc_id'], r['cluster_size']) for r in
+                          D.dedup_clusters(docs, threshold=0.9).collect())
+
+    bands = D._threshold_bands(96, 0.9)
+    for docs in (_clique_corpus(spark),
+                 spark.read.parquet('/root/testdata/sf0.01/documents.parquet')):
+        drv = run(docs)
+        assert seen == {'driver_loop': True, 'rep_pairs': True}
+        dist = run(docs, _MICROBATCH_BUCKET_CAP=0, _MERGE_COLLECT_CAP=0)
+        assert not seen['driver_loop'] and 'rep_pairs' not in seen
+        rep_rows, full_rows = seen['rep_rows'], docs.count() * bands
+        assert rep_rows < full_rows
+        mixed = run(docs, _MICROBATCH_BUCKET_CAP=(rep_rows + full_rows) // 2)
+        assert seen == {'driver_loop': False, 'rep_pairs': True}
+        assert drv == mixed == dist
+        assert len(drv) < docs.count()  # merges fired
 
 
 def test_dedup_clusters_rejects_bad_bands(spark):
@@ -1983,8 +2029,7 @@ def test_microbatch_merge_bounds_cap_edge_parity(spark, monkeypatch):
     monkeypatch.setattr(D, '_microbatch_spanning_clusters', spy)
     exp = sorted((r['doc_id'], r['cluster_size']) for r in
                  D.dedup_clusters(docs, threshold=0.9,
-                                  pair_strategy='spanning',
-                                  cc_probe_first=True).collect())
+                                  pair_strategy='spanning').collect())
     monkeypatch.undo()
     assert counts['edges'] > 1 and counts['buckets'] > 1
 
@@ -2003,8 +2048,7 @@ def test_microbatch_merge_bounds_cap_edge_parity(spark, monkeypatch):
             engaged.clear()
             got = sorted((r['doc_id'], r['cluster_size']) for r in
                          D.dedup_clusters(docs, threshold=0.9,
-                                          pair_strategy='spanning',
-                                          cc_probe_first=True).collect())
+                                          pair_strategy='spanning').collect())
             assert got == exp, (attr, cap)
             assert engaged['driver_path'] is want_engaged, (attr, cap)
             monkeypatch.undo()
