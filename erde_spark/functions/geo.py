@@ -308,6 +308,27 @@ def st_predicate(left_col, right_col, op: str = 'intersects'):
     return _pr(left_col, right_col)
 
 
+def st_intersects_geom(col, geom):
+    """Boolean column: does each geometry intersect ``geom``, one kernel
+    geometry resolved on the DRIVER and captured in the UDF closure (as
+    ``st_transform`` captures its transform)? Null geometry is False, so
+    a filter on this column drops it. Plain WKB points skip the generic
+    parser."""
+    pred = O.PREDICATES['intersects']
+
+    @F.pandas_udf(T.BooleanType())
+    def _hit(wkb: pd.Series) -> pd.Series:
+        out = []
+        for v in wkb:
+            if v is None:
+                out.append(False)
+            else:
+                b = bytes(v)
+                out.append(bool(pred(_wkb_point_fast(b) or G.wkb_loads(b), geom)))
+        return pd.Series(out, dtype='bool')
+    return _hit(col)
+
+
 @F.pandas_udf(T.DoubleType())
 def st_distance(a: pd.Series, b: pd.Series) -> pd.Series:
     """Planar minimum distance in CRS units (0 when intersecting); WKB

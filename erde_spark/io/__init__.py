@@ -92,18 +92,25 @@ class ManifestParquetDriver(_Driver):
 
 class ParquetDriver(_Driver):
     """Plain parquet via the native scan, plus GeoParquet awareness on
-    read: if any footer carries the standard ``geo`` file-metadata key
-    (geoparquet.org spec — the reference has no GeoParquet support at
-    all), the primary geometry column keeps its WKB bytes and the
-    declared CRS is stamped into column metadata so the whole geo
-    operator surface works on it directly. Footer inspection reads ONE
-    file's metadata via pyarrow — never a data scan."""
+    read: if the first data file's footer carries the standard ``geo``
+    file-metadata key (geoparquet.org spec — the reference has no
+    GeoParquet support at all), the primary geometry column keeps its
+    WKB bytes and the declared CRS is stamped into column metadata so
+    the whole geo operator surface works on it directly.
+
+    The same footer gives the Spark schema (see ``_parquet_footer``), so
+    a plain read submits no Spark job: Spark's own schema inference
+    runs a one-task job per call."""
     name = 'parquet'
     path_re = re.compile(r'^.*\.(parquet|pq)$')
 
     def read(self, spark, path, **kw):
-        df = spark.read.parquet(path, **kw)
-        meta = _geoparquet_meta(path)
+        schema, geo = _parquet_footer(spark, path)
+        # read options (mergeSchema among them) may change the schema:
+        # Spark's inference decides then
+        reader = spark.read if schema is None or kw else spark.read.schema(schema)
+        df = reader.parquet(path, **kw)
+        meta = _geoparquet_meta(geo)
         if meta:
             from erde_spark.geo.crs import set_crs, set_covering
             col, crs, cov = meta
@@ -217,55 +224,94 @@ def _stamp_geoparquet(path: str, col: str, epsg: int | None,
             os.remove(crc)
 
 
-def _geoparquet_meta(path: str) -> tuple[str, int, str | None] | None:
-    """(primary geometry column, EPSG code, bbox covering column or
-    None) from the first parquet footer under ``path`` carrying the
-    ``geo`` key, else None. Bounded driver-side metadata read (no row
-    groups touched)."""
-    import glob
+def _parquet_footer(spark, path: str):
+    """(Spark schema or None, ``geo`` footer metadata or None) from the
+    footer of the first data file of a local parquet path (a URI path
+    gets (None, None)).
+
+    Files are listed the way Spark's file index lists them: names
+    starting with ``_`` or ``.`` are hidden, no suffix is required, and
+    the first data file by path is the one Spark's schema inference
+    reads (``mergeSchema`` off). The schema comes from Spark's own
+    ``ParquetFileFormat.readSchemaFromFooter`` with a converter built
+    from the session conf, so it equals the inferred one, without the
+    inference job. The schema is None — Spark infers it — when the
+    session's ``mergeSchema`` is on, when the directory is partitioned
+    or nested or carries summary files, and when there is no readable
+    data file. Only the footer is read, never a row group."""
     import json
     import os
+
+    from py4j.protocol import Py4JJavaError
+    from pyspark.sql import types as T
+    if os.path.isfile(path):
+        files, plain = [path], True
+    elif os.path.isdir(path):
+        names = sorted(n for n in os.listdir(path)
+                       if not n.startswith(('_', '.')) and not n.endswith('._COPYING_'))
+        files = [os.path.join(path, n) for n in names
+                 if os.path.isfile(os.path.join(path, n))]
+        plain = (len(files) == len(names)
+                 and not any(os.path.exists(os.path.join(path, n))
+                             for n in ('_metadata', '_common_metadata')))
+    else:
+        return None, None
+    if not files:
+        return None, None
     try:
-        import pyarrow.parquet as pq
-    except ImportError:  # pragma: no cover
+        jvm = spark._jvm
+        pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+        state = spark._jsparkSession.sessionState()
+        f = jvm.org.apache.hadoop.fs.Path(os.path.abspath(files[0]))
+        md = pq.ParquetFooterReader.readFooter(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+                f, state.newHadoopConf()),
+            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter
+            .SKIP_ROW_GROUPS)
+        geo = md.getFileMetaData().getKeyValueMetaData().get('geo')
+        if not plain or state.conf().isParquetSchemaMergingEnabled():
+            return None, geo
+        js = pq.ParquetFileFormat.readSchemaFromFooter(
+            jvm.org.apache.parquet.hadoop.Footer(f, md),
+            pq.ParquetToSparkSchemaConverter(state.conf()))
+        return T.StructType.fromJson(json.loads(js.json())), geo
+    except Py4JJavaError:
+        # unreadable or unconvertible footer: Spark's inference reports it
+        return None, None
+
+
+def _geoparquet_meta(raw: str | None) -> tuple[str, int, str | None] | None:
+    """(primary geometry column, EPSG code, bbox covering column or
+    None) from a footer's ``geo`` metadata JSON, else None."""
+    import json
+    if not raw:
         return None
-    files = ([path] if os.path.isfile(path)
-             else sorted(glob.glob(os.path.join(path, '*.parquet'))))
-    for f in files[:4]:
-        try:
-            kv = pq.ParquetFile(f).metadata.metadata or {}
-        except Exception:
-            continue
-        raw = kv.get(b'geo')
-        if not raw:
-            continue
-        try:
-            g = json.loads(raw)
-            col = g['primary_column']
-            crs = g['columns'][col].get('crs')
-            # spec: missing/None crs means OGC:CRS84 (lon/lat WGS84)
-            epsg = 4326
-            if isinstance(crs, dict):
-                ident = crs.get('id', {})
-                if str(ident.get('authority', '')).upper() == 'EPSG':
-                    epsg = int(ident.get('code', 4326))
-            # GeoParquet 1.1 bbox covering: accept only the standard
-            # shape (one struct column with xmin/ymin/xmax/ymax leaves)
-            cov = None
-            paths = (g['columns'][col].get('covering') or {}).get('bbox')
-            if isinstance(paths, dict):
-                roots = {tuple(paths.get(a, ())) [:1] for a in
-                         ('xmin', 'ymin', 'xmax', 'ymax')}
-                ok = all(
-                    isinstance(paths.get(a), list) and len(paths[a]) == 2
-                    and paths[a][1] == a
-                    for a in ('xmin', 'ymin', 'xmax', 'ymax'))
-                if ok and len(roots) == 1:
-                    cov = paths['xmin'][0]
-            return col, epsg, cov
-        except Exception:
-            return None
-    return None
+    try:
+        g = json.loads(raw)
+        col = g['primary_column']
+        crs = g['columns'][col].get('crs')
+        # spec: missing/None crs means OGC:CRS84 (lon/lat WGS84)
+        epsg = 4326
+        if isinstance(crs, dict):
+            ident = crs.get('id', {})
+            if str(ident.get('authority', '')).upper() == 'EPSG':
+                epsg = int(ident.get('code', 4326))
+        # GeoParquet 1.1 bbox covering: accept only the standard
+        # shape (one struct column with xmin/ymin/xmax/ymax leaves)
+        cov = None
+        paths = (g['columns'][col].get('covering') or {}).get('bbox')
+        if isinstance(paths, dict):
+            roots = {tuple(paths.get(a, ())) [:1] for a in
+                     ('xmin', 'ymin', 'xmax', 'ymax')}
+            ok = all(
+                isinstance(paths.get(a), list) and len(paths[a]) == 2
+                and paths[a][1] == a
+                for a in ('xmin', 'ymin', 'xmax', 'ymax'))
+            if ok and len(roots) == 1:
+                cov = paths['xmin'][0]
+        return col, epsg, cov
+    except Exception:
+        return None
 
 
 class OrcDriver(_Driver):

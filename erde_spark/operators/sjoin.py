@@ -34,9 +34,18 @@ from erde_spark.functions.geo import st_bounds, st_predicate
 
 _OPS = ('intersects', 'within', 'contains')
 
+#: ``st_bounds`` marked nondeterministic for the join sides. Catalyst
+#: infers ``isnotnull(__l_minx)``-style constraints from the bbox join
+#: condition and pushes them down. With a deterministic bounds alias the
+#: pushed Filter inlines the UDF call below the bounds Project, where
+#: ExtractPythonUDFs gives it a second ArrowEvalPython node: two bounds
+#: passes per side. A nondeterministic expression is never inlined or
+#: reordered, so the inferred Filter reads the one bounds evaluation.
+_st_bounds_once = st_bounds.asNondeterministic()
+
 
 def _with_bounds(df: DataFrame, on: str, prefix: str) -> DataFrame:
-    b = st_bounds(df[on])
+    b = _st_bounds_once(df[on])
     return (df.withColumn('__b', b)
               .withColumn(f'{prefix}minx', F.col('__b.minx'))
               .withColumn(f'{prefix}miny', F.col('__b.miny'))
@@ -217,8 +226,10 @@ def _sj_pairs(left_df: DataFrame, right_df: DataFrame, left_on: str, right_on: s
         cell_size = _estimate_cell_size(left, right)
 
     # Null geometry matches nothing: emit an empty cell array so the explode
-    # drops the row. (An isNotNull FILTER here would be predicate-pushed
-    # below the bounds projection and force a second UDF evaluation.)
+    # drops the row. Catalyst also infers isNotNull constraints on the
+    # bounds from the bbox condition; because the bounds UDF is
+    # nondeterministic (_st_bounds_once) that inferred Filter reads the
+    # single bounds evaluation instead of re-evaluating the UDF below it.
     n_l, cov_l = _covering_cells('__l_', cell_size)
     l_salt = F.pmod(F.hash('__lid'), F.lit(SENTINEL_SALTS))
     l_cells = (F.when(n_l <= MAX_CELLS_PER_GEOM,

@@ -8,14 +8,14 @@ request is split into blocks of at most ``max_table_size`` cells, longer
 side split first (`erde/op/table.py:165-173` arithmetic).
 
 Physical shape (Spark-first — replaces the reference's driver-side
-ProcessPoolExecutor): each side gets sequential ids and a block id
-(``id // block_rows``); each side is collapsed to one row per block
-(``collect_list`` bounded by the block size); the small block tables
-cross-join so ONE task row = ONE OSRM request, and the kernel melts the
-response matrix into long rows. The N x M product materializes only as
-the union of per-request results, never as a shuffled pair table. At 100
-TB-scale point sets, block count = (N/br) x (M/bc) tasks — pure task
-parallelism, no driver fan-out, no collect.
+ProcessPoolExecutor): each side is cut into blocks of at most the
+block size, one row per block, straight from its scan partitions (no
+shuffle); the small block tables cross-join so ONE task row = ONE OSRM
+request, and the kernel melts the response matrix into long rows. The
+N x M product materializes only as the union of per-request results,
+never as a shuffled pair table. At 100 TB-scale point sets, block count
+= (N/br) x (M/bc) tasks — pure task parallelism, no driver fan-out, no
+collect.
 """
 
 from __future__ import annotations
@@ -24,7 +24,7 @@ import urllib.parse
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -73,28 +73,42 @@ def _table_request(host: str, sources, destinations, annotations: str,
 
 def _blocked(df: DataFrame, id_col: str, geometry: str, block_rows: int,
              prefix: str) -> DataFrame:
-    """One row per block: (block id, list of (id, x, y) structs).
+    """One row per block: ``<prefix>pts``, a list of (id, x, y) structs.
 
     Any partition of the points into <= block_rows groups yields exactly
     the full pair coverage (pairs = union over block-pair products), so
-    blocks are formed per Spark partition — local row numbers only, no
-    global sort, no driver collect.
+    blocks are cut from each scan partition in arrival order by one
+    ``mapInPandas`` that also computes the centroids: no shuffle, no
+    sort, no driver collect, and a task holds at most one block of
+    points at a time.
     """
-    from erde_spark.functions.geo import st_centroid_xy
-    xy = st_centroid_xy(F.col(geometry))
-    w = Window.partitionBy('__pid').orderBy(f'{prefix}id')
-    pts = (df.select(F.col(id_col).alias(f'{prefix}id'),
-                     xy['x'].alias('__x'), xy['y'].alias('__y'))
-             .withColumn('__pid', F.spark_partition_id())
-             .withColumn('__seq', F.row_number().over(w) - 1)
-             .withColumn(f'{prefix}block',
-                         F.struct('__pid', F.floor(F.col('__seq') / block_rows)
-                                  .alias('__b'))))
-    return (pts.groupBy(f'{prefix}block')
-            .agg(F.sort_array(F.collect_list(F.struct(
-                '__seq', F.col(f'{prefix}id').alias('id'), '__x', '__y')))
-                .alias(f'{prefix}pts'))
-            .drop(f'{prefix}block'))
+    pt = T.StructType([T.StructField('id', df.schema[id_col].dataType),
+                       T.StructField('__x', T.DoubleType()),
+                       T.StructField('__y', T.DoubleType())])
+    col = f'{prefix}pts'
+
+    def _cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from erde_spark.functions.geo import _wkb_point_fast
+        from erde_spark.geo import geom as G
+        from erde_spark.geo import ops as O
+        block = []
+        for pdf in batches:
+            for i, g in zip(pdf['id'], pdf['g']):
+                if g is None:
+                    x = y = None
+                else:
+                    b = bytes(g)
+                    x, y = O.geom_centroid(_wkb_point_fast(b) or G.wkb_loads(b))
+                block.append((i, x, y))
+                if len(block) == block_rows:
+                    yield pd.DataFrame({col: [block]})
+                    block = []
+        if block:
+            yield pd.DataFrame({col: [block]})
+
+    return (df.select(F.col(id_col).alias('id'), F.col(geometry).alias('g'))
+              .mapInPandas(_cut, schema=T.StructType([
+                  T.StructField(col, T.ArrayType(pt))])))
 
 
 TABLE_SCHEMA_BASE = [

@@ -107,11 +107,12 @@ def spread_to_cores(df):
                 if splits >= cores:
                     return df
         except Exception:
-            # unreadable listing (moved files, exotic scheme): fall
-            # through to the spread — the repartition is correct either
-            # way, this probe only decides whether it is needed
+            # unreadable listing (moved files, exotic scheme) or an
+            # unparseable size conf: the RDD probe below decides, so a
+            # failed stat never adds a shuffle to an already-wide scan
             pass
-        return df.repartition(cores)
+        else:
+            return df.repartition(cores)
     if df.rdd.getNumPartitions() >= cores:
         return df
     return df.repartition(cores)

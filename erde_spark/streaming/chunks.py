@@ -7,8 +7,10 @@ processes with bounded queues; on Spark a DataFrame already *is* a
 partitioned, pipelined, back-pressured chunk stream, so:
 
 * ``read_stream(path)``  -> a DataFrame, optionally spatially prefiltered
-  (the reference's ``geometry_filter`` pushdown) and repartitioned so a
-  partition is roughly ``chunk_size`` rows;
+  (the reference's ``geometry_filter`` pushdown). ``chunk_size`` is
+  accepted for parity with the reference's signature and ignored: the
+  scan's own partitions are the chunks, and repartitioning to a row
+  target would add a shuffle;
 * ``write_stream(path)`` -> a context manager whose calls append
   DataFrames to one sink (the reference's multi-chunk writer), with
   partial-output cleanup on failure (reference ``_cancel``,
@@ -28,7 +30,8 @@ DEFAULT_CHUNK_SIZE = 10_000
 
 def read_stream(path: str, geometry_filter=None, chunk_size: int = DEFAULT_CHUNK_SIZE,
                 spark: SparkSession | None = None, **kw) -> DataFrame:
-    """Open ``path`` as a (lazily evaluated) chunk stream."""
+    """Open ``path`` as a (lazily evaluated) chunk stream.
+    ``chunk_size`` is accepted for reference-API parity and ignored."""
     from erde_spark.io import read_df
     df = read_df(path, spark, **kw)
     if geometry_filter is not None:
@@ -39,39 +42,41 @@ def read_stream(path: str, geometry_filter=None, chunk_size: int = DEFAULT_CHUNK
 def _apply_geometry_filter(df: DataFrame, geometry_filter, spark) -> DataFrame:
     """Reference's scan-time spatial mask (`erde/io/base.py:63-88`):
     accepts a path, a kernel geometry tuple, WKT, or a DataFrame with a
-    geometry column; rows not intersecting it are dropped.
+    geometry column; rows whose geometry does not intersect it (null
+    geometry included) are dropped.
+
+    A WKT or kernel-geometry mask is parsed on the driver and applied as
+    ONE filter on a predicate pandas UDF that carries the parsed mask in
+    its closure: one Python pass over the scan, no join, no shuffle, no
+    broadcast. A DataFrame or path mask goes through ``sfilter`` (the
+    spatial semi join), since its geometries are only known to Spark.
 
     When the source is a GeoParquet file carrying a 1.1 ``bbox``
     covering column, a coarse envelope-overlap predicate on the
-    covering struct is prepended BEFORE the exact spatial semi-join:
-    those are plain double comparisons on scan columns, so Spark pushes
-    them into the parquet reader (PushedFilters on bbox.xmin/… leaf
-    stats) and row groups outside the filter's envelope are never
-    read — the fiona-style bbox pushdown, re-expressed as parquet
-    row-group pruning. Conservative by construction (envelope ⊇
-    geometry), so the exact sfilter that follows keeps semantics."""
+    covering struct is prepended BEFORE the exact test: those are plain
+    double comparisons on scan columns, so Spark pushes them into the
+    parquet reader (PushedFilters on bbox.xmin/… leaf stats) and row
+    groups outside the mask's envelope are never read — the
+    fiona-style bbox pushdown, re-expressed as parquet row-group
+    pruning. Conservative by construction (envelope ⊇ geometry), so
+    the exact test that follows keeps semantics."""
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
     from erde_spark.geo import geom as G
+    from erde_spark.geo import ops as O
     from erde_spark.geo.crs import get_covering
-    from erde_spark.operators.sjoin import sfilter
     spark = spark or SparkSession.getActiveSession()
-    env = None  # filter envelope (x0, y0, x1, y1) when cheaply known
+    geom = fdf = env = None  # env: mask envelope (x0, y0, x1, y1)
     if isinstance(geometry_filter, DataFrame):
         fdf = geometry_filter
+    elif isinstance(geometry_filter, str) and not geometry_filter.lstrip().startswith(
+            ('POINT', 'LINESTRING', 'POLYGON', 'MULTI', 'GEOMETRY')):
+        from erde_spark.io import read_df
+        fdf = read_df(geometry_filter, spark)
     else:
-        if isinstance(geometry_filter, str) and not geometry_filter.lstrip().startswith(
-                ('POINT', 'LINESTRING', 'POLYGON', 'MULTI', 'GEOMETRY')):
-            from erde_spark.io import read_df
-            fdf = read_df(geometry_filter, spark)
-        else:
-            from erde_spark.geo import ops as O
-            geom = G.wkt_loads(geometry_filter) if isinstance(geometry_filter, str) \
-                else geometry_filter
-            env = O.geom_bounds(geom)  # driver-side, no job
-            schema = T.StructType([T.StructField('geometry', T.BinaryType())])
-            fdf = spark.createDataFrame([(G.wkb_dumps(geom),)], schema)
+        geom = G.wkt_loads(geometry_filter) if isinstance(geometry_filter, str) \
+            else geometry_filter
+        env = O.geom_bounds(geom)  # driver-side, no job
     cov = get_covering(df)
     if cov is not None:
         if env is None:
@@ -87,6 +92,10 @@ def _apply_geometry_filter(df: DataFrame, geometry_filter, spark) -> DataFrame:
             c = F.col(cov)
             df = df.filter((c['xmin'] <= float(x1)) & (c['xmax'] >= float(x0))
                            & (c['ymin'] <= float(y1)) & (c['ymax'] >= float(y0)))
+    if geom is not None:
+        from erde_spark.functions.geo import st_intersects_geom
+        return df.filter(st_intersects_geom(F.col('geometry'), geom))
+    from erde_spark.operators.sjoin import sfilter
     return sfilter(df, fdf, op='intersects')
 
 

@@ -1281,3 +1281,114 @@ def test_ranged_formats_read_via_pyarrow_fs_uri(spark, tmp_path):
              st, value_col='v')
     got2 = read_df('file://' + st, spark).orderBy('row_id').collect()
     assert [r['value'][0] for r in got2] == [float(i) for i in range(20)]
+
+
+def _conf(spark, key, value):
+    """Set a SQL conf; returns the restore callable."""
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+
+    def restore():
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    return restore
+
+
+def test_read_df_parquet_schema_matches_inference(spark, tmp_path):
+    """read_df resolves a plain parquet schema from one footer instead
+    of Spark's inference job; the result must equal what inference
+    gives, field metadata included, on every testdata table, on a
+    TIMESTAMP(NANOS) column under nanosAsLong, on a GeoParquet file with
+    a bbox covering and on part files without a .parquet suffix."""
+    import glob
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.errors import AnalysisException
+
+    from erde_spark.functions.geo import st_point
+    from erde_spark.geo.crs import get_covering, set_covering, set_crs
+    from erde_spark.io import _parquet_footer
+
+    tables = sorted(glob.glob('/root/testdata/sf0.001/*.parquet'))
+    assert tables
+    for p in tables:
+        assert read_df(p, spark).schema == spark.read.parquet(p).schema, p
+
+    nanos = str(tmp_path / 'nanos.parquet')
+    pq.write_table(pa.table({'id': [1, 2], 'ts': pa.array(
+        [1_000_000_001, 2_000_000_002], pa.timestamp('ns'))}), nanos, version='2.6')
+    restore = _conf(spark, 'spark.sql.legacy.parquet.nanosAsLong', 'true')
+    try:
+        assert read_df(nanos, spark).schema == spark.read.parquet(nanos).schema
+        assert dict(read_df(nanos, spark).dtypes)['ts'] == 'bigint'
+    finally:
+        restore()
+    restore = _conf(spark, 'spark.sql.legacy.parquet.nanosAsLong', 'false')
+    try:
+        # without the legacy flag the type is illegal in both paths alike
+        for read in (read_df, lambda p, s: s.read.parquet(p)):
+            with pytest.raises(AnalysisException, match='PARQUET_TYPE_ILLEGAL'):
+                read(nanos, spark)
+    finally:
+        restore()
+
+    geo = str(tmp_path / 'cov.parquet')
+    pts = (spark.range(50)
+           .select('id', st_point(F.col('id').cast('double'), F.lit(1.0)).alias('geometry')))
+    write_df(set_crs(pts, 4326), geo, covering=True)
+    back = read_df(geo, spark)
+    raw = spark.read.parquet(geo)
+    footer = _parquet_footer(spark, geo)[0]
+    assert footer is not None
+    assert spark.read.schema(footer).parquet(geo).schema == raw.schema
+    # on top of the scan schema, read_df stamps the footer's CRS and
+    # covering into the geometry column metadata
+    assert back.schema == set_covering(set_crs(raw, 4326), 'bbox').schema
+    assert get_covering(back) == 'bbox' and get_crs(back) == 4326
+
+    bare = str(tmp_path / 'bare.parquet')
+    spark.range(30).withColumn('s', F.col('id').cast('string')) \
+        .repartition(2).write.parquet(bare)
+    for n in os.listdir(bare):
+        if n.endswith('.parquet'):
+            os.rename(os.path.join(bare, n), os.path.join(bare, n[:-len('.parquet')]))
+    assert not any(n.endswith('.parquet') for n in os.listdir(bare))
+    assert _parquet_footer(spark, bare)[0] is not None
+    assert read_df(bare, spark).schema == spark.read.parquet(bare).schema
+    assert read_df(bare, spark).count() == 30
+
+
+def test_read_df_parquet_schema_fallbacks_match_inference(spark, tmp_path):
+    """Where one footer does not decide the schema, read_df leaves it to
+    Spark's inference: a partitioned directory, read options, and schema
+    merging (read option or session conf)."""
+    from erde_spark.io import _parquet_footer
+
+    part = str(tmp_path / 'part.parquet')
+    spark.range(20).withColumn('k', F.col('id') % 3).write.partitionBy('k').parquet(part)
+    assert _parquet_footer(spark, part)[0] is None
+    assert read_df(part, spark).schema == spark.read.parquet(part).schema
+    assert 'k' in read_df(part, spark).columns
+
+    plain = str(tmp_path / 'plain.parquet')
+    spark.range(5).write.parquet(plain)
+    assert read_df(plain, spark, int96RebaseMode='CORRECTED').schema == \
+        spark.read.parquet(plain, int96RebaseMode='CORRECTED').schema
+
+    merged = str(tmp_path / 'merged.parquet')
+    spark.range(5).write.parquet(merged)
+    spark.range(5).withColumn('extra', F.lit('x')).write.mode('append').parquet(merged)
+    with_opt = read_df(merged, spark, mergeSchema='true')
+    assert with_opt.schema == spark.read.parquet(merged, mergeSchema='true').schema
+    assert 'extra' in with_opt.columns
+    restore = _conf(spark, 'spark.sql.parquet.mergeSchema', 'true')
+    try:
+        assert _parquet_footer(spark, merged)[0] is None
+        assert read_df(merged, spark).schema == spark.read.parquet(merged).schema
+        assert 'extra' in read_df(merged, spark).columns
+    finally:
+        restore()

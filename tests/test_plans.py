@@ -45,12 +45,12 @@ def test_lookup_is_broadcast_when_small(spark):
 
 
 def test_sjoin_udf_passes_bounded(spark):
-    """The grid spatial join must cross the Python boundary a bounded
-    number of times (geometry synthesis + bounds per side + one refine),
-    not once per plan node."""
+    """The spatial join crosses the Python boundary once per side
+    (geometry synthesis and bounds share one node) plus one refine, not
+    once per plan node."""
     import __spark_entry__ as E
     q = E.q_sjoin_points_rects(spark, SF)
-    assert count_python_udf_passes(q) <= 6
+    assert count_python_udf_passes(q) == 3
 
 
 def test_sagg_shuffle_count(spark):
@@ -340,3 +340,97 @@ def test_geoparquet_bbox_covering_pushdown(spark, tmp_path):
                      spark=spark)
     assert not any('bbox' in s for s in pushed_filters(q3))
     assert q3.count() == 101
+
+
+def _bounds_evals(df) -> int:
+    """st_bounds calls evaluated by the plan's Python nodes."""
+    from erde_spark.plans.inspect import physical_plan
+    return sum(ln.count('st_bounds(') for ln in physical_plan(df).splitlines()
+               if 'ArrowEvalPython' in ln)
+
+
+def test_st_bounds_once_per_join_side(spark):
+    """Every spatial-join plan evaluates st_bounds once per side. The
+    isnotnull constraints Catalyst infers from the bbox condition must
+    read that one evaluation, not re-run the UDF below a pushed Filter
+    (which took two bounds nodes per side)."""
+    import __spark_entry__ as e
+    from erde_spark.operators.sjoin import sagg, sfilter, sjoin, snearest
+    t = e._t(spark, SF, 'customer', 'nation')
+    pts = e._cust_points(t['customer'])
+    rects = e._nation_rects(t['nation'])
+    plans = {'sjoin': sjoin(pts, rects, op='within'),
+             'sjoin_grid': sjoin(pts, rects, op='within', cell_size=1.0),
+             'sjoin_left': sjoin(pts, rects, how='left'),
+             'sagg': sagg(rects, pts, {'c_custkey': 'count'}),
+             'sagg_grid': sagg(rects, pts, {'c_custkey': 'count'}, cell_size=1.0),
+             'sfilter': sfilter(pts, rects),
+             'sfilter_grid': sfilter(pts, rects, cell_size=1.0),
+             'snearest': snearest(pts, rects, 0.5)}
+    got = {k: _bounds_evals(q) for k, q in plans.items()}
+    assert got == {k: 2 for k in plans}, got
+
+
+def test_read_stream_wkt_filter_one_python_pass(spark, tmp_path):
+    """A WKT geometry_filter is one predicate UDF over the scan: one
+    Python node, no shuffle, no broadcast of the scanned side. Null
+    geometry is dropped, as the spatial semi join dropped it."""
+    from erde_spark.functions.geo import st_point
+    from erde_spark.geo.crs import set_crs
+    from erde_spark.io import write_df
+    from erde_spark.plans.inspect import physical_plan
+    from erde_spark.streaming.chunks import read_stream
+    path = str(tmp_path / 'pts.parquet')
+    pts = (spark.range(400)
+           .select('id', st_point((F.col('id') * 0.01).cast('double'),
+                                  F.lit(0.5)).alias('geometry'))
+           .withColumn('geometry', F.when(F.col('id') != 150, F.col('geometry')))
+           .repartition(3))
+    write_df(set_crs(pts, 4326), path)
+    q = read_stream(path, geometry_filter='POLYGON ((1 0, 2 0, 2 1, 1 1, 1 0))',
+                    spark=spark)
+    plan = physical_plan(q)
+    assert count_python_udf_passes(q) == 1, plan
+    assert 'Exchange' not in plan and 'BroadcastExchange' not in plan, plan
+    got = sorted(r['id'] for r in q.select('id').collect())
+    assert got == [i for i in range(100, 201) if i != 150]
+
+
+def test_od_table_blocks_without_hash_shuffle(spark):
+    """od_table cuts each side into request blocks per scan partition
+    (one mapInPandas): no hash-partitioned exchange in the plan."""
+    from erde_spark.plans.inspect import physical_plan
+    from erde_spark.routing.table import od_table
+    import __spark_entry__ as e
+    t = e._t(spark, SF, 'customer', 'nation')
+    src = e._cust_points(t['customer']).select(
+        F.col('c_custkey').alias('sid'), 'geometry')
+    dst = e._nation_rects(t['nation']).select(
+        F.col('n_nationkey').alias('did'), 'geometry')
+    od = od_table(src, dst, 'http://localhost:1', max_table_size=100,
+                  n_sources=150, n_destinations=25)
+    plan = physical_plan(od)
+    assert 'hashpartitioning' not in plan, plan
+
+
+def test_read_df_parquet_submits_no_job(spark, tmp_path):
+    """read_df on a plain parquet directory resolves the schema from one
+    footer on the driver: no Spark job. spark.read.parquet on the same
+    directory infers the schema with a job, which shows the check sees
+    jobs."""
+    from erde_spark.io import read_df
+    path = str(tmp_path / 't.parquet')
+    spark.range(100).withColumn('v', F.col('id') * 2).repartition(3) \
+        .write.parquet(path)
+    sc = spark.sparkContext
+
+    def jobs():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(None))
+
+    before = jobs()
+    df = read_df(path, spark)
+    assert jobs() == before
+    assert df.columns == ['id', 'v']
+    spark.read.parquet(path)
+    assert jobs() != before

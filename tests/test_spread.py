@@ -79,3 +79,40 @@ def test_streaming_frame_returned_unchanged(spark, tmp_path):
     stream = (spark.readStream.schema('id long').parquet(p))
     assert stream.isStreaming
     assert spread_to_cores(stream) is stream
+
+
+def test_stat_probe_failure_falls_back_to_rdd_probe(spark, tmp_path, monkeypatch):
+    # the size probe throwing (here: an unparseable split-size conf)
+    # must hand the decision to the partition probe, not repartition
+    # unconditionally — a single file that already scans wide keeps its
+    # plan, a narrow one is still spread
+    import erde_spark.session as S
+
+    def _raise(v):
+        raise ValueError(f'unparseable size {v!r}')
+    monkeypatch.setattr(S, '_bytes_conf', _raise)
+    cores = spark.sparkContext.defaultParallelism
+
+    wide = str(tmp_path / 'wide')
+    spark.range(0, 20000).select(
+        'id', F.sha2(F.col('id').cast('string'), 256).alias('s')) \
+        .coalesce(1).write.parquet(wide)
+    size = sum(os.path.getsize(os.path.join(wide, f))
+               for f in os.listdir(wide) if f.endswith('.parquet'))
+    old = spark.conf.get('spark.sql.files.maxPartitionBytes')
+    try:
+        spark.conf.set('spark.sql.files.maxPartitionBytes',
+                       str(max(1, size // (cores + 1))))
+        df = spark.read.parquet(wide)
+        assert len(df.inputFiles()) == 1
+        assert df.rdd.getNumPartitions() >= cores
+        assert spread_to_cores(df) is df
+    finally:
+        spark.conf.set('spark.sql.files.maxPartitionBytes', old)
+
+    narrow = str(tmp_path / 'narrow')
+    spark.range(0, 100).coalesce(1).write.parquet(narrow)
+    df = spark.read.parquet(narrow)
+    out = spread_to_cores(df)
+    assert out is not df
+    assert out.rdd.getNumPartitions() == cores
